@@ -16,14 +16,16 @@ interface (SURVEY.md §7 names this exact fallback):
   analog). At 10^10 rows with n_buckets=4096 a batch touching 3 domains
   touches a handful of buckets, not the table.
 - **Two write modes** (Iceberg copy-on-write vs merge-on-read):
-  * ``cow`` — merge rewrites affected buckets: (existing ∪ winners) → one
-    LWW window → new base files. Read-optimized; write cost O(bucket).
   * ``mor`` (default) — merge APPENDS the deduped winners as delta files
     per bucket, never reading the base: write cost O(batch) — this is what
     sustains CDC apply throughput at 10^10 events. Reads resolve
-    base+deltas with the same LWW window; ``compact()`` folds a bucket's
-    entries back to a single base file (run it every N batches or when
-    ``entries_per_bucket`` exceeds a threshold).
+    base+deltas with the same LWW resolver (``_lww``); ``compact()`` folds
+    a bucket's entries back to a single base file (run it every N batches
+    or when ``entries_per_bucket`` exceeds a threshold).
+  * ``cow`` — merge writes the same delta, then rewrites the buckets it
+    touched with the compaction rewrite and commits that rewrite in place
+    of the buckets; the delta dir is deleted. Read-optimized; write cost
+    O(bucket).
 - **Exactly-once offset ledger** — the manifest embeds applied
   ``(query_id, batch_id)`` keys; a merge whose batch key is present is a
   no-op. Ledger entry and data land in ONE atomic pointer swap, so
@@ -46,7 +48,9 @@ interface (SURVEY.md §7 names this exact fallback):
 Shuffle budget per merge: mor moves the wide payload across the memory bus
 exactly ONCE (a single exchange on bucket; dedup is a within-partition sort
 + lag filter because bucket = f(url) already co-locates every key). cow
-adds the affected-bucket read-back and a key-window. The engine is
+adds the rewrite: the affected buckets are read back, resolved by the same
+resolver (one exchange on the key hash) and exchanged once more on bucket
+for the key-sorted write. The engine is
 bandwidth-frugal by design — at cluster scale network bytes are the merge
 bottleneck, and in this sandbox the shared memory bus plays that role
 (measured: ~5 GB/s aggregate; see BENCH/BASELINE.md).
@@ -68,7 +72,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from go_bqloader_spark.lake.fsio import LocalFS
-from go_bqloader_spark.operators.merge import lww_dedup, salted_lww_dedup
 
 SEQ_COL = "_seq"
 DELETED_COL = "_deleted"
@@ -143,20 +146,6 @@ class LakeTable:
 
     # auto-compact a query's ledger once it holds this many batch entries
     LEDGER_HORIZON = 256
-    # Per-bucket merge stats: 0 (default) = derive them AFTER the write by
-    # scanning only the narrow (b, _seq, _deleted) columns of the freshly
-    # written parquet — a column-pruned second job that never touches the
-    # wide payload. Raising this enables the alternative path where stats
-    # ride the write job via an Observation (3 conditional aggregates per
-    # bucket) for tables up to that many buckets. MEASURED (round 3,
-    # interleaved A/B at the bench workload, 2M events / 8 batches /
-    # local[32]): Observation 18.6 s median vs read-back 9.4 s at 64
-    # buckets, and still no win at 16 (the 3N-expression eval per output
-    # row dwarfs the narrow second scan) — hence 0. Observation stats also
-    # ride Spark accumulators, which can double-count under task retries /
-    # speculative execution; the read-back counts are exact, so keep the
-    # default wherever lineage metrics must be trustworthy.
-    _OBS_MAX_BUCKETS = int(os.environ.get("GBS_OBS_MAX_BUCKETS", "0"))
 
     def __init__(self, spark: SparkSession, path: str, fs=None):
         self.spark = spark
@@ -196,8 +185,8 @@ class LakeTable:
         maps can do — a hash-distributed key inside one bucket spans the
         whole zone range, but its Bloom still excludes most files. Costs:
         ~``bloom_bits/6`` bytes of manifest per live file entry, and MoR
-        merges take a narrow read-back pass instead of the Observation
-        fast path. False-positive rate for a file with n distinct keys is
+        merges take the narrow Spark read-back pass instead of reading
+        parquet footers. False-positive rate for a file with n distinct keys is
         ``(1 - exp(-2n/bits))^2`` — size bits ≳ 10n for ~3%.
         """
         assert write_mode in ("mor", "cow")
@@ -294,17 +283,22 @@ class LakeTable:
             self._gcache[gname] = g
         return g
 
-    def _resolve_manifest(self, mj: dict[str, Any]) -> dict[str, Any]:
-        if "buckets" in mj:  # format-2 / hand-inlined manifest
-            return mj
+    def _fold_groups(self, gnames: list[str]) -> dict[str, list]:
+        """bucket -> entries after folding ``gnames`` in order: a group's
+        replaces drop the bucket's earlier entries, its adds append."""
         buckets: dict[str, list] = {}
-        for gname in mj.get("groups", []):
+        for gname in gnames:
             g = self._load_group(gname)
             for b in g.get("replaces", []):
                 buckets.pop(str(b), None)
             for b, es in g.get("adds", {}).items():
                 buckets.setdefault(b, []).extend(es)
-        return dict(mj, buckets=buckets)
+        return buckets
+
+    def _resolve_manifest(self, mj: dict[str, Any]) -> dict[str, Any]:
+        if "buckets" in mj:  # format-2 / hand-inlined manifest
+            return mj
+        return dict(mj, buckets=self._fold_groups(mj.get("groups", [])))
 
     @staticmethod
     def _diff_buckets(
@@ -353,13 +347,7 @@ class LakeTable:
         and are GC'd by expire_snapshots once no retained manifest lists
         them."""
         prefix, tail = groups[:-keep_tail], groups[-keep_tail:]
-        buckets: dict[str, list] = {}
-        for gname in prefix:
-            g = self._load_group(gname)
-            for b in g.get("replaces", []):
-                buckets.pop(str(b), None)
-            for b, es in g.get("adds", {}).items():
-                buckets.setdefault(b, []).extend(es)
+        buckets = self._fold_groups(prefix)
         if not buckets:
             return tail
         g = {"adds": buckets, "replaces": []}
@@ -655,15 +643,20 @@ class LakeTable:
         structural: dict[str, Any] | None = None,
     ) -> None:
         sv = m["schema_version"] + 1
-        m2 = dict(m)
-        m2["schemas"] = dict(m["schemas"], **{str(sv): fields})
-        m2["schema_version"] = sv
-        m2["parent"] = m["version"]
-        m2["version"] = m["version"] + 1
-        m2["summary"] = {"operation": op}
-        m2["metrics"] = []
-        m2.update(structural or {})
-        self._write_manifest(m2, expected_parent=m["version"])
+        self._commit_child(
+            m, {"operation": op}, schema_version=sv,
+            schemas=dict(m["schemas"], **{str(sv): fields}), **(structural or {}),
+        )
+
+    def _commit_child(self, m: dict[str, Any], summary: dict[str, Any], **fields) -> None:
+        """Commit the child of snapshot ``m`` that a schema DDL, compact or
+        rebucket derives from it: no lineage metrics, and a lost CAS
+        surfaces as :class:`CommitConflict` (see its docs)."""
+        self._write_manifest(
+            dict(m, version=m["version"] + 1, parent=m["version"], metrics=[],
+                 summary=summary, **fields),
+            expected_parent=m["version"],
+        )
 
     # ---------------------------------------------------------------- read
     # ---------------------------------------------------------- zone maps
@@ -687,27 +680,6 @@ class LakeTable:
         if types[c] == "date":
             return F.unix_date(col)
         return col
-
-    def _zone_aggs(self, m: dict[str, Any], zone_cols: list[str]) -> list[F.Column]:
-        aggs: list[F.Column] = []
-        for c in zone_cols:
-            e = self._zone_expr(m, c)
-            aggs.append(F.min(e).alias(f"__zmn_{c}"))
-            aggs.append(F.max(e).alias(f"__zmx_{c}"))
-        return aggs
-
-    @staticmethod
-    def _zones_from_rows(rows, zone_cols: list[str]) -> dict[int, dict[str, list]]:
-        out: dict[int, dict[str, list]] = {}
-        for r in rows:
-            z = {
-                c: [r[f"__zmn_{c}"], r[f"__zmx_{c}"]]
-                for c in zone_cols
-                if r[f"__zmn_{c}"] is not None
-            }
-            if z:
-                out[int(r["b"])] = z
-        return out
 
     @staticmethod
     def _zone_overlaps(entry: dict[str, Any], zones: dict[str, tuple]) -> bool:
@@ -856,7 +828,7 @@ class LakeTable:
                         # _WIDENINGS contract, no file rewrite
                         c = c.cast(_spark_type(f["type"]))
                     if f["name"] == DELETED_COL:
-                        # delta files store tombstones as TRUE-or-NULL so
+                        # data files store tombstones as TRUE-or-NULL so
                         # footer null_count gives exact deleted counts;
                         # readers always see the historical false/true
                         c = F.coalesce(c, F.lit(False))
@@ -876,6 +848,39 @@ class LakeTable:
             if buckets is None or int(b) in buckets
         )
 
+    @staticmethod
+    def _lww(
+        rows: DataFrame, key: list[str], part: str | None = None,
+        n_parts: int | None = None,
+    ) -> DataFrame:
+        """The table's one last-writer-wins resolver, used by MoR and CoW
+        merges, reads, compaction and rebucket: one exchange on ``part``
+        (a column every version of a key shares; ``None`` = the key hash
+        itself; ``n_parts`` fixes the partition count, as a bucketed write
+        needs), a within-partition sort on ``(xxhash64(key), key, _seq
+        DESC, _deleted DESC)`` and a ``lag`` filter that keeps the first
+        row of each key. The 8-byte hash leads the sort so almost every
+        comparison resolves radix-style instead of walking long shared
+        url prefixes, and the filter needs no second exchange.
+
+        Tie rule: at equal ``(key, _seq)`` a tombstone wins, so a
+        redelivered delete still beats the row it deleted; any other
+        same-seq rows are verbatim redeliveries and either one is the
+        winner. ``_deleted`` is TRUE-or-NULL in a merge batch and
+        TRUE/FALSE once read back; DESC (nulls last) orders both alike."""
+        kh = F.xxhash64(*[F.col(k) for k in key])
+        part = kh if part is None else F.col(part)
+        rows = rows.repartition(n_parts, part) if n_parts else rows.repartition(part)
+        w = W.partitionBy(part).orderBy(
+            kh, *key, F.col(SEQ_COL).desc(), F.col(DELETED_COL).desc()
+        )
+        # lag(1) is NULL only on a partition's first row, which is always a
+        # first-of-key, even when every key column is NULL
+        first = F.lag(F.lit(1)).over(w).isNull()
+        for k in key:
+            first = first | ~F.lag(k).over(w).eqNullSafe(F.col(k))
+        return rows.withColumn("__first", first).filter("__first").drop("__first")
+
     def read(
         self,
         version: int | None = None,
@@ -885,8 +890,8 @@ class LakeTable:
         point: dict[str, Any] | None = None,
     ) -> DataFrame:
         """Read a snapshot. In mor mode, base+delta files are resolved with
-        one LWW window (skipped automatically when every bucket has a
-        single base entry). Tombstones are hidden unless requested.
+        ``_lww`` (skipped automatically when every bucket has a single
+        base entry). Tombstones are hidden unless requested.
 
         ``zones={"col": (lo, hi)}`` restricts the read to rows whose KEY
         column falls in [lo, hi] (either bound may be None), pruning data
@@ -910,7 +915,18 @@ class LakeTable:
         table this reads a handful of files instead of a bucket's worth;
         without blooms it still prunes to the bucket. Mutually exclusive
         with ``buckets``/``zones``."""
-        m = self.manifest(version)
+        return self._read(self.manifest(version), buckets, include_deleted, zones, point)
+
+    def _read(
+        self,
+        m: dict[str, Any],
+        buckets: list[int] | None,
+        include_deleted: bool,
+        zones: dict[str, tuple] | None = None,
+        point: dict[str, Any] | None = None,
+    ) -> DataFrame:
+        """:meth:`read` over a manifest dict — also one that was never
+        committed, like the CoW rewrite's base-plus-delta snapshot."""
         bloom_positions: list[int] | None = None
         if point is not None:
             if buckets is not None or zones is not None:
@@ -941,12 +957,7 @@ class LakeTable:
                 if hi is not None:
                     raw = raw.filter(e <= hi)
         if self._needs_resolve(m, buckets):
-            w = W.partitionBy(*m["key"]).orderBy(F.col(SEQ_COL).desc())
-            raw = (
-                raw.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+            raw = self._lww(raw, m["key"])
         if not include_deleted:
             raw = raw.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(
                 DELETED_COL
@@ -1017,8 +1028,6 @@ class LakeTable:
         self,
         changes: DataFrame,
         batch_key: tuple[str, int] | None = None,
-        salted: bool = True,
-        n_salts: int = 16,
         commit_retries: int = 3,
     ) -> MergeStats:
         """Apply a change batch: LWW upsert + delete, exactly-once.
@@ -1040,9 +1049,7 @@ class LakeTable:
         last: CommitConflict | None = None
         for _ in range(commit_retries + 1):
             try:
-                return self._merge_once(
-                    changes, batch_key, salted, n_salts, commit_retries
-                )
+                return self._merge_once(changes, batch_key, commit_retries)
             except CommitConflict as e:
                 last = e
         raise last
@@ -1051,146 +1058,36 @@ class LakeTable:
         self,
         changes: DataFrame,
         batch_key: tuple[str, int] | None,
-        salted: bool,
-        n_salts: int,
         commit_retries: int,
     ) -> MergeStats:
         m = self.manifest()
-        version = m["version"]
         if batch_key is not None and self._committed_in(m, *batch_key):
-            return MergeStats(version, True, [], 0, 0, None)
+            return MergeStats(m["version"], True, [], 0, 0, None)
 
-        key = m["key"]
         data_cols = [
             f["name"]
             for f in self.schema_fields(m)
             if f["name"] not in (SEQ_COL, DELETED_COL)
         ]
         changes = self._align_changes(m, changes)
-
-        if m.get("write_mode", "cow") == "mor":
-            # Single-payload-shuffle path: repartition by BUCKET (one
-            # exchange of the wide rows), sort within partitions by
-            # (key, seq desc), keep the first row of each key group via
-            # lag — the LWW winner — then write, already clustered by
-            # bucket. The wide html/text payload crosses the memory bus
-            # exactly once; dedup needs no second exchange because
-            # bucket = f(url) co-locates every key. Hot DOMAINS spread
-            # across buckets by url-hash; the sort absorbs hot-KEY skew
-            # in O(n log n) with spill (no per-key reducer to pin).
-            bucketed = changes.withColumn("__b", self._bucket_expr(m)).repartition(
-                m["n_buckets"], F.col("__b")
-            )
-            # sort prefix: an 8-byte key hash resolves almost every
-            # comparison radix-style — without it the sorter walks the
-            # long shared "https://host..." url prefixes byte by byte
-            kh = F.xxhash64(*[F.col(k) for k in key])
-            w = W.partitionBy("__b").orderBy(kh, *key, F.col("seq").desc())
-            first_of_key = ~F.lag(key[0]).over(w).eqNullSafe(F.col(key[0]))
-            for k in key[1:]:
-                first_of_key = first_of_key | ~F.lag(k).over(w).eqNullSafe(F.col(k))
-            # _deleted is stored TRUE-or-NULL (NULL = live) in delta files:
-            # the parquet footer's exact per-chunk null_count then yields
-            # the tombstone count without any read-back job (see
-            # _footer_stats_zones). _read_raw normalizes NULL back to
-            # false, so every reader sees the same values as before.
-            out_rows = (
-                bucketed.withColumn("__first", F.coalesce(first_of_key, F.lit(True)))
-                .filter(F.col("__first"))
-                .select(
-                    *data_cols,
-                    F.col("seq").alias(SEQ_COL),
-                    F.when(F.col("op") == "D", F.lit(True)).alias(DELETED_COL),
-                    F.col("__b").alias("b"),
-                )
-            )
-            return self._finish_merge(
-                m, out_rows, batch_key, replace=False, commit_retries=commit_retries
-            )
-
-        # ---- cow: rewrite affected buckets (read-optimized) ------------
-        # Affected buckets + per-bucket lineage stats come from a NARROW
-        # pre-pass over (key, bucket_col, seq, op) only — the wide payload
-        # is never shuffled or persisted here (round 2 persisted the wide
-        # winner rows, pinning them in executor memory for the whole
-        # merge). The main write job unions existing rows with the RAW
-        # aligned changes: the survivor window below is itself the LWW
-        # dedup, so a separate winners pass would shuffle the payload an
-        # extra time for nothing.
-        narrow_cols = list(dict.fromkeys([*key, m["bucket_col"]]))
-        # __oppri DESC == op ASC for op in {D,E,I,U}: the narrow pre-pass
-        # breaks (key, seq) ties exactly like the payload survivor window
-        # below, so lineage stats / affected buckets always describe the
-        # rows actually written (ADVICE r3: divergent tie winners could
-        # land a row in a bucket outside `affected`)
-        oppri = (
-            F.when(F.col("op") == "D", 3)
-            .when(F.col("op") == "E", 2)
-            .when(F.col("op") == "I", 1)
-            .otherwise(0)
-        )
-        narrow = changes.select(*narrow_cols, "seq", "op").withColumn("__oppri", oppri)
-        if salted:
-            nwin = salted_lww_dedup(
-                narrow, key=key, order_col="seq", n_salts=n_salts,
-                tie_cols=("__oppri",),
-            )
-        else:
-            nwin = lww_dedup(narrow, key=key, order_col="seq", tie_cols=("__oppri",))
-        stats_collected = (
-            nwin.withColumn("__b", self._bucket_expr(m))
-            .groupBy("__b")
-            .agg(
-                F.max("seq").alias("applied_max_seq"),
-                F.sum(F.when(F.col("op") != "D", 1).otherwise(0)).alias("rows_upserted"),
-                F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("rows_deleted"),
-            )
-            .collect()
-        )
-        affected = sorted(int(r["__b"]) for r in stats_collected)
-        if not affected:
-            return self._commit_noop(m, batch_key, commit_retries=commit_retries)
-
-        existing = self.read(buckets=affected, include_deleted=True).withColumn(
-            "__b", self._bucket_expr(m)
-        )
-        # existing rows join the race as op='E' (live) / 'D' (tombstone)
-        # with their stored _seq; one window decides every survivor. On a
-        # (key, seq) tie 'D' sorts first (op asc), so a redelivered delete
-        # still beats the row it already tombstoned.
-        ex = existing.select(
-            F.when(F.col(DELETED_COL), F.lit("D")).otherwise(F.lit("E")).alias("op"),
-            F.col(SEQ_COL).alias("seq"),
+        # Single-payload-shuffle path: the resolver exchanges the wide rows
+        # once, by BUCKET — bucket = f(url) co-locates every key, so its
+        # sort + lag keeps the LWW winners without a second exchange and
+        # the write comes out clustered by bucket. Hot DOMAINS spread
+        # across buckets by url-hash; the sort absorbs hot-KEY skew in
+        # O(n log n) with spill (no per-key reducer to pin). _deleted is
+        # stored TRUE-or-NULL (NULL = live): the parquet footer's exact
+        # per-chunk null_count then yields the tombstone count without a
+        # read-back job (see _footer_stats_zones); _read_raw normalizes
+        # NULL back to false, so every reader sees plain booleans.
+        rows = changes.select(
             *data_cols,
-            "__b",
+            F.col("seq").alias(SEQ_COL),
+            F.when(F.col("op") == "D", F.lit(True)).alias(DELETED_COL),
+            self._bucket_expr(m).alias("b"),
         )
-        ch = changes.withColumn("__b", self._bucket_expr(m)).select(
-            "op", "seq", *data_cols, "__b"
-        )
-        all_rows = ex.unionByName(ch)
-        w = W.partitionBy(*key).orderBy(F.col("seq").desc(), F.col("op").asc())
-        out_rows = (
-            all_rows.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(
-                *data_cols,
-                F.col("seq").alias(SEQ_COL),
-                (F.col("op") == "D").alias(DELETED_COL),
-                F.col("__b").alias("b"),
-            )
-        )
-        return self._finish_merge(
-            m,
-            out_rows.repartition(max(len(affected), 1), F.col("b")),
-            batch_key,
-            replace=True,
-            commit_retries=commit_retries,
-            affected=affected,
-            stats_rows=[
-                (int(r["__b"]), r["applied_max_seq"], r["rows_upserted"], r["rows_deleted"])
-                for r in stats_collected
-            ],
-        )
+        out_rows = self._lww(rows, m["key"], "b", m["n_buckets"])
+        return self._finish_merge(m, out_rows, batch_key, commit_retries)
 
     # zone-col types whose parquet footer min/max are EXACT mirrors of the
     # manifest representation (_zone_expr): int64/int32 raw values, and
@@ -1203,7 +1100,7 @@ class LakeTable:
     def _footer_stats_zones(
         self,
         out_dir: str,
-        written: set[int],
+        written: list[int],
         m: dict[str, Any],
         zone_cols: list[str],
     ):
@@ -1213,14 +1110,17 @@ class LakeTable:
 
         Requires the TRUE-or-NULL ``_deleted`` coding (tombstones =
         footer ``num_values - null_count``) and int-backed zone cols.
-        Returns ``(stats_rows, zones)`` or ``None`` when any needed
-        statistic is missing — the caller then falls back to the Spark
-        read-back, so this is only ever an optimization, never a
+        Returns ``(stats_rows, zones)`` or ``None`` when pyarrow or any
+        needed statistic is missing — the caller then falls back to the
+        Spark read-back, so this is only ever an optimization, never a
         correctness dependency."""
         types = {f["name"]: f["type"] for f in self.schema_fields(m)}
         if any(types.get(c) not in self._FOOTER_ZONE_TYPES for c in zone_cols):
             return None
-        import pyarrow.parquet as pq
+        try:
+            import pyarrow.parquet as pq
+        except ImportError:
+            return None
 
         stats_rows: list[tuple] = []
         zones: dict[int, dict[str, list]] = {}
@@ -1251,11 +1151,18 @@ class LakeTable:
                         return None
                     mx_seq = sst.max if mx_seq is None else max(mx_seq, sst.max)
                     for c in zone_cols:
-                        zst = g.column(idx[c]).statistics
+                        zc = g.column(idx[c])
+                        zst = zc.statistics
                         if zst is None:
                             return None
                         if not zst.has_min_max:
-                            continue  # all-null chunk: Spark min/max skip nulls too
+                            # skip only a provably all-null chunk (Spark's
+                            # min/max skip nulls too); values without
+                            # bounds would record bounds narrower than
+                            # the data and mis-prune reads
+                            if zst.has_null_count and zst.null_count == zc.num_values:
+                                continue
+                            return None
                         lo, hi = zst.min_raw, zst.max_raw
                         cur = zb[c]
                         cur[0] = lo if cur[0] is None else min(cur[0], lo)
@@ -1267,177 +1174,201 @@ class LakeTable:
                     zones[b] = z
         return stats_rows, zones
 
+    def _derive_stats(
+        self,
+        out_dir: str,
+        written: list[int],
+        m: dict[str, Any],
+        zone_cols: list[str],
+        bloom: bool,
+    ) -> tuple[list[tuple], dict[int, dict[str, list]], dict[int, str]]:
+        """The one stats routine for every lake write: per-bucket lineage
+        stats ``(b, max _seq, upserted, deleted)``, zone bounds and key
+        Blooms of a freshly written commit dir. Parquet footers first
+        (zero Spark jobs; local filesystem only — an object-store fs
+        would add a ranged-GET footer method). When a footer lacks a
+        needed statistic, or Blooms are asked for, one narrow
+        column-pruned Spark read-back computes all three in one pass."""
+        if not written:
+            return [], {}, {}
+        if not bloom and type(self.fs) is LocalFS:
+            footer = self._footer_stats_zones(out_dir, written, m, zone_cols)
+            if footer is not None:
+                return footer[0], footer[1], {}
+        back_cols = dict.fromkeys(
+            ["b", SEQ_COL, DELETED_COL, *zone_cols] + (m["key"] if bloom else [])
+        )
+        agged = (
+            self.spark.read.parquet(out_dir)
+            .select(*back_cols)
+            .groupBy("b")
+            .agg(
+                F.max(SEQ_COL).alias("mx"),
+                F.count(F.lit(1)).alias("n"),
+                # a tombstone-free bucket sums NULL under TRUE-or-NULL
+                F.coalesce(F.sum(F.col(DELETED_COL).cast("long")), F.lit(0)).alias("dl"),
+                *[F.min(self._zone_expr(m, c)).alias(f"__zmn_{c}") for c in zone_cols],
+                *[F.max(self._zone_expr(m, c)).alias(f"__zmx_{c}") for c in zone_cols],
+                *(self._bloom_aggs(m) if bloom else []),
+            )
+        )
+        with _no_aqe(self.spark):
+            rows = agged.collect()
+        stats_rows = [(int(r["b"]), r["mx"], r["n"] - r["dl"], r["dl"]) for r in rows]
+        zones: dict[int, dict[str, list]] = {}
+        for r in rows:
+            # all-null zone cols have no bounds; readers keep such files
+            z = {c: [r[f"__zmn_{c}"], r[f"__zmx_{c}"]] for c in zone_cols
+                 if r[f"__zmn_{c}"] is not None}
+            if z:
+                zones[int(r["b"])] = z
+        blooms = self._blooms_from_rows(m, rows) if bloom else {}
+        return stats_rows, zones, blooms
+
+    def _commit_dir(self, m: dict[str, Any], tag: str = "") -> tuple[str, str]:
+        """(table-relative, absolute) path of a new commit's data dir. The
+        c%08d prefix is the version it is written FOR (expire_snapshots'
+        in-flight guard relies on it)."""
+        rel = os.path.join("data", f"c{m['version'] + 1:08d}_{uuid.uuid4().hex[:12]}{tag}")
+        return rel, os.path.join(self.path, rel)
+
+    def _written(self, out_dir: str) -> list[int]:
+        return sorted(
+            int(d.split("=", 1)[1]) for d in self.fs.listdir(out_dir) if d.startswith("b=")
+        )
+
+    @staticmethod
+    def _entries(
+        m: dict[str, Any],
+        rel: str,
+        written: list[int],
+        zones: dict[int, dict[str, list]],
+        blooms: dict[int, str],
+    ) -> dict[int, dict[str, Any]]:
+        """The manifest entry of each bucket dir a commit wrote.
+        ``schema_version`` pins the snapshot the files were WRITTEN under
+        (m, not a later rebase base), so readers resolve them against the
+        schema their parquet footers actually carry."""
+        out: dict[int, dict[str, Any]] = {}
+        for b in written:
+            e = {"path": os.path.join(rel, f"b={b}"), "schema_version": m["schema_version"]}
+            if b in zones:
+                e["zones"] = zones[b]
+            if b in blooms:
+                e["bloom"] = blooms[b]
+            out[b] = e
+        return out
+
+    def _rewrite(
+        self, m: dict[str, Any], rows: DataFrame, n_parts: int, tag: str = ""
+    ) -> tuple[str, list[tuple], dict[int, dict[str, Any]]]:
+        """The bucket rewrite shared by compact, rebucket and CoW merges:
+        resolved ``rows`` (data..., _seq, _deleted, b) are exchanged once
+        on bucket and key-sorted within each bucket file, so parquet
+        row-group min/max on the key columns are tight and zone-filtered
+        reads skip row groups, not just whole buckets. The merge hot path
+        deliberately sorts by key HASH (radix-fast, but key-random row
+        groups); a rewrite is the place to pay for key clustering — same
+        split as Iceberg's sort-order rewrite. Rewrites record full zone
+        bounds (strings included) and Blooms. Returns ``(out_dir,
+        stats_rows, entries)``."""
+        rel, out_dir = self._commit_dir(m, tag)
+        (
+            rows.withColumn(DELETED_COL, F.when(F.col(DELETED_COL), F.lit(True)))
+            .repartition(max(n_parts, 1), F.col("b"))
+            .sortWithinPartitions("b", *m["key"])
+            .write.partitionBy("b")
+            .mode("overwrite")
+            .parquet(out_dir)
+        )
+        written = self._written(out_dir)
+        stats_rows, zones, blooms = self._derive_stats(
+            out_dir, written, m, self._zone_cols(m), self._bloom_bits(m) > 0
+        )
+        return out_dir, stats_rows, self._entries(m, rel, written, zones, blooms)
+
     def _finish_merge(
         self,
         m: dict[str, Any],
         out_rows: DataFrame,
         batch_key: tuple[str, int] | None,
-        replace: bool,
         commit_retries: int = 3,
-        affected: list[int] | None = None,
-        stats_rows: list[tuple] | None = None,
     ) -> MergeStats:
-        """Write ``out_rows`` (cols: data..., _seq, _deleted, b), derive
-        lineage stats, and commit the manifest atomically.
+        """Write the resolved batch ``out_rows`` (cols: data..., _seq,
+        _deleted, b) as one delta dir, derive its lineage stats with
+        ``_derive_stats`` (footers first, else one Spark read-back), and
+        commit the manifest atomically.
 
-        For the mor fast path, per-bucket stats ride the WRITE job itself
-        via an ``Observation`` (conditional aggregates per bucket) — one
-        Spark job per merge, no second pass and no persist/cache of the
-        wide winner rows. Tables with more than ``_OBS_MAX_BUCKETS``
-        buckets fall back to a narrow column-pruned read-back of the
-        freshly written files."""
-        commit_id = uuid.uuid4().hex[:12]
-        rel = os.path.join("data", f"c{m['version'] + 1:08d}_{commit_id}")
-        out_dir = os.path.join(self.path, rel)
-
-        zone_cols = self._zone_cols(m)
-        # string zone bounds are skipped on DELTA appends (replace=False):
-        # keys are hash-scattered within a bucket, so a delta file's string
-        # min/max spans ~the whole key range and never prunes, while
-        # computing it forces the read-back to scan the long url strings
-        # (measured 33% of the read-back pass). Numeric/temporal bounds
-        # stay (batches correlate with event time — they DO prune), and
-        # compaction/rebucket/CoW rewrites are key-sorted, so they record
-        # full bounds. Readers keep entries with missing bounds by design.
-        if not replace:
-            types = {f["name"]: f["type"] for f in self.schema_fields(m)}
-            zone_cols = [c for c in zone_cols if types[c] != "string"]
-        zones: dict[int, dict[str, list]] = {}
-        # True once zones were derived for this commit (footer path): an
-        # empty zones dict then means "genuinely no bounds" (all-null zone
-        # cols), not "not computed yet" — skips the dedicated read-back
-        zones_done = False
-        blooms: dict[int, str] = {}
-        bloom_on = self._bloom_bits(m) > 0
-        obs = None
-        # blooms need a collect_set per file — they force the narrow
-        # read-back path (documented cost in create()); without them the
-        # Observation rides the write job itself
-        if stats_rows is None and m["n_buckets"] <= self._OBS_MAX_BUCKETS and not bloom_on:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            aggs = []
-            for b in range(m["n_buckets"]):
-                cond = F.col("b") == b
-                aggs.append(F.max(F.when(cond, F.col(SEQ_COL))).alias(f"mx{b}"))
-                aggs.append(F.sum(F.when(cond, 1).otherwise(0)).alias(f"n{b}"))
-                aggs.append(
-                    F.sum(
-                        F.when(cond, F.col(DELETED_COL).cast("long")).otherwise(0)
-                    ).alias(f"dl{b}")
-                )
-            out_rows = out_rows.observe(obs, *aggs)
+        A mor merge commits the delta as appended entries. A cow merge
+        then rewrites the buckets the delta touched (``_rewrite`` over a
+        snapshot that includes the delta), commits that rewrite in place
+        of those buckets, and deletes the delta dir whether the commit
+        landed or lost its CAS."""
+        rel, out_dir = self._commit_dir(m)
         with _no_aqe(self.spark):
             out_rows.write.partitionBy("b").mode("overwrite").parquet(out_dir)
-
-        written = {
-            int(d.split("=", 1)[1]) for d in self.fs.listdir(out_dir) if d.startswith("b=")
-        }
-        if stats_rows is None:
-            if not written:  # empty mor batch: nothing written, no-op commit
-                return self._commit_noop(m, batch_key, commit_retries=commit_retries)
-            if obs is not None:
-                vals = obs.get
-                stats_rows = [
-                    (b, vals[f"mx{b}"], vals[f"n{b}"] - (vals[f"dl{b}"] or 0), vals[f"dl{b}"] or 0)
-                    for b in range(m["n_buckets"])
-                    if vals[f"n{b}"]
-                ]
-            else:
-                # lineage stats + zone bounds straight from the parquet
-                # footers just written — a driver-side metadata pass, no
-                # second Spark job (the footer seam is local-FS only; an
-                # object-store fs would add a ranged-GET footer method)
-                footer = None
-                if not bloom_on and type(self.fs) is LocalFS:
-                    footer = self._footer_stats_zones(out_dir, written, m, zone_cols)
-                if footer is not None:
-                    stats_rows, zones = footer
-                    zones_done = True
-                else:
-                    # fallback: one narrow column-pruned read-back computes
-                    # the lineage stats AND the zone-map bounds AND the key
-                    # blooms (same pass, same files)
-                    back_cols = dict.fromkeys(
-                        ["b", SEQ_COL, DELETED_COL, *zone_cols]
-                        + (m["key"] if bloom_on else [])
-                    )
-                    back = self.spark.read.parquet(out_dir).select(*back_cols)
-                    agged = back.groupBy("b").agg(
-                        F.max(SEQ_COL).alias("applied_max_seq"),
-                        F.count(F.lit(1)).alias("n"),
-                        # coalesce: with the TRUE-or-NULL tombstone
-                        # coding a delete-free bucket sums NULL, not 0
-                        F.coalesce(
-                            F.sum(F.col(DELETED_COL).cast("long")), F.lit(0)
-                        ).alias("rows_deleted"),
-                        *self._zone_aggs(m, zone_cols),
-                        *(self._bloom_aggs(m) if bloom_on else []),
-                    )
-                    with _no_aqe(self.spark):
-                        collected = agged.collect()
-                    if bloom_on:
-                        blooms = self._blooms_from_rows(m, collected)
-                    stats_rows = [
-                        (
-                            int(r["b"]),
-                            r["applied_max_seq"],
-                            r["n"] - r["rows_deleted"],
-                            r["rows_deleted"],
-                        )
-                        for r in collected
-                    ]
-                    zones = self._zones_from_rows(collected, zone_cols)
-        if affected is None:
-            affected = sorted(written)
-        if not written and not affected:
-            return self._commit_noop(m, batch_key, commit_retries=commit_retries)
-        if written and (
-            (not zones_done and not zones and zone_cols) or (bloom_on and not blooms)
-        ):
-            # cow / Observation paths: dedicated narrow zone+bloom read-back
-            sel = dict.fromkeys(
-                ["b", *zone_cols] + (m["key"] if bloom_on else [])
+        affected = self._written(out_dir)
+        if not affected:  # empty batch: nothing written, ledger-only commit
+            self.fs.delete(out_dir)
+            return self._commit_merge(m, out_dir, {}, [], [], False, batch_key, commit_retries)
+        replace = m.get("write_mode", "cow") == "cow"
+        # string zone bounds are skipped on DELTA appends: keys are
+        # hash-scattered within a bucket, so a delta file's string min/max
+        # spans ~the whole key range and never prunes, while computing it
+        # forces the read-back to scan the long url strings (measured 33%
+        # of the read-back pass). Numeric/temporal bounds stay (batches
+        # correlate with event time — they DO prune). A cow delta is never
+        # committed, so it needs its lineage stats only.
+        types = {f["name"]: f["type"] for f in self.schema_fields(m)}
+        zone_cols = [] if replace else [
+            c for c in self._zone_cols(m) if types[c] != "string"
+        ]
+        bloom = self._bloom_bits(m) > 0 and not replace
+        stats_rows, zones, blooms = self._derive_stats(out_dir, affected, m, zone_cols, bloom)
+        new_entries = self._entries(m, rel, affected, zones, blooms)
+        delta_dir = out_dir if replace else None
+        try:
+            if replace:
+                with_delta = {b: list(es) for b, es in m["buckets"].items()}
+                for b, e in new_entries.items():
+                    with_delta.setdefault(str(b), []).append(e)
+                rows = self._read(
+                    dict(m, buckets=with_delta), affected, include_deleted=True
+                ).withColumn("b", self._bucket_expr(m))
+                out_dir, _, new_entries = self._rewrite(m, rows, len(affected))
+            return self._commit_merge(
+                m, out_dir, new_entries, stats_rows, affected, replace,
+                batch_key, commit_retries,
             )
-            rows = (
-                self.spark.read.parquet(out_dir)
-                .select(*sel)
-                .groupBy("b")
-                .agg(
-                    *self._zone_aggs(m, zone_cols),
-                    *(self._bloom_aggs(m) if bloom_on else []),
-                )
-                .collect()
-            )
-            zones = self._zones_from_rows(rows, zone_cols)
-            if bloom_on:
-                blooms = self._blooms_from_rows(m, rows)
+        finally:
+            if delta_dir is not None:
+                self.fs.delete(delta_dir)
 
+    def _commit_merge(
+        self,
+        m: dict[str, Any],
+        out_dir: str,
+        new_entries: dict[int, dict[str, Any]],
+        stats_rows: list[tuple],
+        affected: list[int],
+        replace: bool,
+        batch_key: tuple[str, int] | None,
+        commit_retries: int,
+    ) -> MergeStats:
+        """Commit a merge's new entries, lineage stats and ledger entry as
+        one manifest; an empty batch commits no entries (ledger only)."""
         rows_upserted = sum(r[2] for r in stats_rows)
         rows_deleted = sum(r[3] for r in stats_rows)
         max_seq = max((r[1] for r in stats_rows), default=None)
         qid, bid = batch_key if batch_key else ("", -1)
 
         def _build(base: dict[str, Any]) -> dict[str, Any]:
-            new_buckets = {b: list(entries) for b, entries in base["buckets"].items()}
+            new_buckets = {b: list(es) for b, es in base["buckets"].items()}
             if replace:
                 for b in affected:
                     new_buckets.pop(str(b), None)
-            for b in sorted(written):
-                # schema_version pins the snapshot the files were WRITTEN
-                # under (m, not base): after a rebase past a concurrent
-                # schema commit, readers still resolve these files against
-                # the schema their parquet footers actually carry
-                entry = {
-                    "path": os.path.join(rel, f"b={b}"),
-                    "schema_version": m["schema_version"],
-                }
-                if b in zones:
-                    entry["zones"] = zones[b]
-                if b in blooms:
-                    entry["bloom"] = blooms[b]
-                new_buckets.setdefault(str(b), []).append(entry)
+            for b, e in new_entries.items():
+                new_buckets.setdefault(str(b), []).append(e)
 
             ledger, floors = self._advance_ledger(base, batch_key, max_seq)
             # roll the per-bucket applied-seq watermark forward so resume
@@ -1507,36 +1438,6 @@ class LakeTable:
                 base = fresh
         raise AssertionError("unreachable")  # loop always returns or raises
 
-    def _commit_noop(
-        self,
-        m: dict[str, Any],
-        batch_key: tuple[str, int] | None,
-        commit_retries: int = 3,
-    ) -> MergeStats:
-        base = m
-        for attempt in range(commit_retries + 1):
-            ledger, floors = self._advance_ledger(base, batch_key, None)
-            m2 = dict(
-                base,
-                version=base["version"] + 1,
-                parent=base["version"],
-                ledger=ledger,
-                ledger_floor=floors,
-                metrics=[],
-                summary={"operation": "merge", "affected_buckets": 0, "rows_upserted": 0, "rows_deleted": 0},
-            )
-            try:
-                self._write_manifest(m2, expected_parent=base["version"])
-                return MergeStats(m2["version"], False, [], 0, 0, None)
-            except CommitConflict:
-                fresh = self.manifest()
-                if batch_key is not None and self._committed_in(fresh, *batch_key):
-                    return MergeStats(fresh["version"], True, [], 0, 0, None)
-                if attempt >= commit_retries:
-                    raise
-                base = fresh
-        raise AssertionError("unreachable")
-
     # ------------------------------------------------------------- compact
     def entries_per_bucket(self) -> dict[int, int]:
         m = self.manifest()
@@ -1563,71 +1464,20 @@ class LakeTable:
         ]
         if not targets:
             return 0
-        resolved = self.read(buckets=targets, include_deleted=True)
+        resolved = self._read(m, targets, include_deleted=True)
         if expire_tombstones:
-            resolved = resolved.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-        resolved = resolved.withColumn("b", self._bucket_expr(m))
-
-        commit_id = uuid.uuid4().hex[:12]
-        rel = os.path.join("data", f"c{m['version'] + 1:08d}_{commit_id}_compact")
-        out_dir = os.path.join(self.path, rel)
-        # read-optimized rewrite: key-sort within each bucket file so
-        # parquet row-group min/max on the key columns are tight and
-        # zone-filtered reads (`read(zones=...)` → pushed parquet
-        # predicates) skip row groups, not just whole buckets. The merge
-        # hot path deliberately sorts by key-HASH (radix-fast, but
-        # key-random row groups); compaction is the offline place to pay
-        # for key clustering — same split as Iceberg's sort-order rewrite.
-        (
-            resolved.repartition(max(len(targets), 1), F.col("b"))
-            .sortWithinPartitions("b", *m["key"])
-            .write.partitionBy("b")
-            .mode("overwrite")
-            .parquet(out_dir)
+            resolved = resolved.filter(~F.col(DELETED_COL))
+        _, _, entries = self._rewrite(
+            m, resolved.withColumn("b", self._bucket_expr(m)), len(targets), "_compact"
         )
-        written = {
-            int(d.split("=", 1)[1]) for d in self.fs.listdir(out_dir) if d.startswith("b=")
-        }
-        zone_cols = self._zone_cols(m)
-        zones: dict[int, dict[str, list]] = {}
-        blooms: dict[int, str] = {}
-        bloom_on = self._bloom_bits(m) > 0
-        if (zone_cols or bloom_on) and written:
-            sel = dict.fromkeys(
-                ["b", *zone_cols] + (m["key"] if bloom_on else [])
-            )
-            rows = (
-                self.spark.read.parquet(out_dir)
-                .select(*sel)
-                .groupBy("b")
-                .agg(
-                    *self._zone_aggs(m, zone_cols),
-                    *(self._bloom_aggs(m) if bloom_on else []),
-                )
-                .collect()
-            )
-            zones = self._zones_from_rows(rows, zone_cols)
-            if bloom_on:
-                blooms = self._blooms_from_rows(m, rows)
-        new_buckets = {b: list(entries) for b, entries in m["buckets"].items()}
+        new_buckets = {b: list(es) for b, es in m["buckets"].items()}
         for b in targets:
             new_buckets.pop(str(b), None)
-        for b in sorted(written):
-            entry = {"path": os.path.join(rel, f"b={b}"), "schema_version": m["schema_version"]}
-            if b in zones:
-                entry["zones"] = zones[b]
-            if b in blooms:
-                entry["bloom"] = blooms[b]
-            new_buckets[str(b)] = [entry]
-        m2 = dict(
-            m,
-            version=m["version"] + 1,
-            parent=m["version"],
-            buckets=new_buckets,
-            metrics=[],
-            summary={"operation": "compact", "buckets": len(targets)},
+        for b, e in entries.items():
+            new_buckets[str(b)] = [e]
+        self._commit_child(
+            m, {"operation": "compact", "buckets": len(targets)}, buckets=new_buckets
         )
-        self._write_manifest(m2, expected_parent=m["version"])
         return len(targets)
 
     def rebucket(self, n_buckets: int) -> int:
@@ -1645,65 +1495,17 @@ class LakeTable:
         m = self.manifest()
         if n_buckets == m["n_buckets"]:
             return 0
-        resolved = self.read(include_deleted=True)
-        m_new = dict(m, n_buckets=n_buckets)
-        rows = resolved.withColumn("b", self._bucket_expr(m_new))
-
-        commit_id = uuid.uuid4().hex[:12]
-        rel = os.path.join("data", f"c{m['version'] + 1:08d}_{commit_id}_rebucket")
-        out_dir = os.path.join(self.path, rel)
-        (
-            rows.repartition(max(n_buckets, 1), F.col("b"))
-            .sortWithinPartitions("b", *m["key"])  # key-clustered row
-            # groups, same rationale as compact()
-            .write.partitionBy("b")
-            .mode("overwrite")
-            .parquet(out_dir)
+        rows = self._read(m, None, include_deleted=True).withColumn(
+            "b", self._bucket_expr(dict(m, n_buckets=n_buckets))
         )
-        written = {
-            int(d.split("=", 1)[1])
-            for d in self.fs.listdir(out_dir)
-            if d.startswith("b=")
-        }
-        zone_cols = self._zone_cols(m)
-        bloom_on = self._bloom_bits(m) > 0
-        back = (
-            self.spark.read.parquet(out_dir)
-            .select(
-                *dict.fromkeys(
-                    ["b", SEQ_COL, *zone_cols] + (m["key"] if bloom_on else [])
-                )
-            )
-            .groupBy("b")
-            .agg(
-                F.max(SEQ_COL).alias("__wm"),
-                *self._zone_aggs(m, zone_cols),
-                *(self._bloom_aggs(m) if bloom_on else []),
-            )
-            .collect()
-        )
-        zones = self._zones_from_rows(back, zone_cols)
-        blooms = self._blooms_from_rows(m, back) if bloom_on else {}
-        new_buckets: dict[str, list] = {}
-        for b in sorted(written):
-            entry = {"path": os.path.join(rel, f"b={b}"), "schema_version": m["schema_version"]}
-            if b in zones:
-                entry["zones"] = zones[b]
-            if b in blooms:
-                entry["bloom"] = blooms[b]
-            new_buckets[str(b)] = [entry]
-        m2 = dict(
-            m,
-            version=m["version"] + 1,
-            parent=m["version"],
+        _, stats_rows, entries = self._rewrite(m, rows, n_buckets, "_rebucket")
+        self._commit_child(
+            m, {"operation": "rebucket", "n_buckets": n_buckets},
             n_buckets=n_buckets,
-            buckets=new_buckets,
-            watermarks={str(int(r["b"])): r["__wm"] for r in back},
-            metrics=[],
-            summary={"operation": "rebucket", "n_buckets": n_buckets},
+            buckets={str(b): [e] for b, e in entries.items()},
+            watermarks={str(b): mx for b, mx, _up, _dl in stats_rows},
         )
-        self._write_manifest(m2, expected_parent=m["version"])
-        return len(written)
+        return len(entries)
 
     # -------------------------------------------------------------- metrics
     _METRICS_SCHEMA = (
@@ -1752,13 +1554,7 @@ class LakeTable:
         m = self.manifest()
         wms = {int(b): s for b, s in m.get("watermarks", {}).items()}
         hot = [b for b, mx in wms.items() if mx > seq]
-        if not hot:
-            empty = self.spark.createDataFrame([], self.spark_schema(m))
-            return empty if include_deleted else empty.drop(DELETED_COL)
-        out = self.read(
-            version=m["version"], buckets=hot, include_deleted=include_deleted
-        )
-        return out.filter(F.col(SEQ_COL) > seq)
+        return self._read(m, hot, include_deleted).filter(F.col(SEQ_COL) > seq)
 
     # --------------------------------------------------------------- expiry
     def expire_snapshots(

@@ -444,22 +444,25 @@ def test_create_exclusive_never_partial(tmp_path):
     assert [f for f in fs.listdir(str(tmp_path)) if ".cas." in f] == []
 
 
-@pytest.mark.parametrize("salted", [True, False])
-def test_cow_tie_break_matches_survivor_window(spark, tmp_path, salted):
-    """A (key, seq) tie between a 'U' and a 'D' in one batch (outside the
-    verbatim-redelivery contract): the CoW narrow stats pre-pass must pick
-    the same winner as the payload survivor window — 'D' — so the delete
-    is both counted in lineage AND actually applied (ADVICE r3)."""
+@pytest.mark.parametrize("delete_first", [True, False])
+def test_cow_tie_break_matches_survivor_window(spark, tmp_path, delete_first):
+    """A (key, seq) tie between a 'U' and a 'D' in one batch: the CoW
+    merge's lineage stats must describe the same winner its rewrite keeps
+    — 'D', by the resolver's tie rule, whichever of the two rows arrives
+    first — so the delete is both counted in lineage AND actually applied
+    (ADVICE r3)."""
     t = _make_table(spark, tmp_path, n_buckets=4, write_mode="cow")
     url = "https://tie.ex/p"
+    tie = [("U", 5, url, None, None, "keepme", "en"),
+           ("D", 5, url, None, None, None, None)]
+    if delete_first:
+        tie.reverse()
     batch = spark.createDataFrame(
-        [("U", 5, url, None, None, "keepme", "en"),
-         ("D", 5, url, None, None, None, None),
-         ("U", 1, "https://other.ex/p", None, None, "x", "en")],
+        tie + [("U", 1, "https://other.ex/p", None, None, "x", "en")],
         "op string, seq bigint, url string, warc_ts timestamp, "
         "html binary, text string, lang string",
     )
-    s = t.merge(batch, batch_key=("q", 0), salted=salted)
+    s = t.merge(batch, batch_key=("q", 0))
     live = [r["url"] for r in t.read().select("url").collect()]
     assert live == ["https://other.ex/p"]  # the delete won the tie
     assert s.rows_deleted == 1 and s.rows_upserted == 1
@@ -554,31 +557,6 @@ def test_expire_snapshots_spares_inflight_commit_dirs(spark, tmp_path):
     t.merge(_tiny_batch(spark, 8), batch_key=("q", 8))
     out = t.expire_snapshots(keep_n=1)  # default grace
     assert os.path.exists(os.path.join(rebasing, "b=0"))
-
-
-def test_observation_stats_path_matches_readback(spark, tmp_path):
-    """The optional Observation stats path (GBS_OBS_MAX_BUCKETS > 0; off by
-    default after the round-3 A/B) must produce the same per-bucket
-    lineage metrics and watermarks as the default narrow read-back."""
-    results = {}
-    for arm, obs_max in (("readback", 0), ("obs", 256)):
-        old = LakeTable._OBS_MAX_BUCKETS
-        LakeTable._OBS_MAX_BUCKETS = obs_max
-        try:
-            t = LakeTable.create(
-                spark, str(tmp_path / f"tbl_{arm}"), PAGE_COLS,
-                key=["url", "warc_ts"], n_buckets=4,
-            )
-            for i in range(2):
-                t.merge(_tiny_batch(spark, i), batch_key=("q", i))
-            results[arm] = (
-                sorted(map(tuple, t.metrics().collect())),
-                t.resume_watermarks(),
-                sorted(map(tuple, t.read().collect())),
-            )
-        finally:
-            LakeTable._OBS_MAX_BUCKETS = old
-    assert results["obs"] == results["readback"]
 
 
 @pytest.mark.parametrize("mode", MODES)
@@ -996,3 +974,71 @@ def test_footer_stats_all_null_zone_col(spark, tmp_path):
     for es in m["buckets"].values():
         for e in es:
             assert "zones" not in e or "warc_ts" not in (e.get("zones") or {})
+
+
+def _strip_bounds(md, col):
+    """Parquet footer metadata ``md`` with ``col``'s statistics replaced in
+    every row group by ones that count no nulls but carry no min/max —
+    what a writer that truncates or omits statistics leaves behind."""
+    from types import SimpleNamespace as NS
+
+    strip = [md.schema.column(i).name for i in range(md.num_columns)].index(col)
+    no_bounds = NS(has_min_max=False, has_null_count=True, null_count=0)
+
+    def row_group(i):
+        rg = md.row_group(i)
+
+        def column(j):
+            c = rg.column(j)
+            return NS(num_values=c.num_values,
+                      statistics=no_bounds if j == strip else c.statistics)
+
+        return NS(num_rows=rg.num_rows, column=column)
+
+    return NS(schema=md.schema, num_columns=md.num_columns,
+              num_row_groups=md.num_row_groups, row_group=row_group)
+
+
+def test_footer_stats_refuse_values_without_bounds(spark, tmp_path, monkeypatch):
+    """ADVICE (low): a zone column chunk holding non-null values but no
+    min/max must send the footer helper to the Spark fallback (``None``)
+    — skipping it would record zone bounds narrower than the data, and
+    zone pruning would then drop files that hold matching rows."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), PAGE_COLS, n_buckets=2)
+    b = spark.createDataFrame(
+        [("I", 1, "https://a/x", "2024-01-01 00:00:00", None, "v1", "en"),
+         ("I", 2, "https://b/y", "2024-01-02 00:00:00", None, "v2", "en")],
+        "op string, seq bigint, url string, warc_ts string, "
+        "html binary, text string, lang string",
+    ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
+    t.merge(b, batch_key=("q", 0))
+    m = t.manifest()
+    written = sorted(int(k) for k in m["buckets"])
+    rel = m["buckets"][str(written[0])][0]["path"]
+    out_dir = os.path.join(t.path, os.path.dirname(rel))
+    # the real footers carry the bounds: the fast path answers
+    assert t._footer_stats_zones(out_dir, written, m, ["warc_ts"]) is not None
+    real = pq.read_metadata
+    monkeypatch.setattr(pq, "read_metadata", lambda p: _strip_bounds(real(p), "warc_ts"))
+    assert t._footer_stats_zones(out_dir, written, m, ["warc_ts"]) is None
+
+
+def test_merge_commits_without_pyarrow(spark, tmp_path, monkeypatch):
+    """ADVICE (low): without pyarrow the footer helper falls back to the
+    Spark read-back instead of raising ImportError, and the MoR merge
+    commits the same lineage metrics and watermarks as the footer path."""
+    import sys
+
+    def replay(path):
+        t = LakeTable.create(spark, str(path), PAGE_COLS, n_buckets=4)
+        for i in range(2):
+            t.merge(_tiny_batch(spark, i), batch_key=("q", i))
+        return sorted(tuple(r) for r in t.metrics().collect()), t.resume_watermarks()
+
+    footer = replay(tmp_path / "footer")
+    monkeypatch.setitem(sys.modules, "pyarrow.parquet", None)
+    assert replay(tmp_path / "no_pyarrow") == footer and footer[0]
