@@ -20,9 +20,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import functions as F
 
-from go_bqloader_spark.lake.table import DELETED_COL, SEQ_COL, LakeTable, MergeStats
+from go_bqloader_spark.lake.table import LakeTable, MergeStats
 from go_bqloader_spark.operators.dedup import near_dup_clusters
 
 
@@ -51,7 +51,9 @@ def near_dup_rewrite(
     """Near-dedup maintenance: cluster the table's live rows on
     ``text_col`` (MinHash-LSH → connected components), keep ONE
     representative per cluster (minimum key — deterministic), and
-    tombstone the rest via the normal exactly-once merge path.
+    tombstone the rest via the normal exactly-once merge path. The scan
+    and the tombstones read one snapshot: a tombstone carries the decided
+    row's seq + 1, so a later update with a higher seq outranks it.
 
     Re-running with the same ``(query_id, batch_id)`` is a no-op (ledger
     skip); re-running with a fresh ``batch_id`` after new ingests only
@@ -64,10 +66,10 @@ def near_dup_rewrite(
     """
     m = table.manifest()
     key = m["key"]
-    live = table.read()
-    docs = live.filter(F.col(text_col).isNotNull()).select(
-        F.concat_ws("\x00", *key).alias("__id"), F.col(text_col)
+    live = table.read(version=m["version"]).withColumn(
+        "__id", F.concat_ws("\x00", *key)
     )
+    docs = live.filter(F.col(text_col).isNotNull()).select("__id", text_col)
     # ONE evaluation of the scan + LSH + component pipeline (r4 judge
     # item 5: merge's internal actions used to re-trigger it): the
     # cluster labels are checkpointed eagerly, then `scanned`, the loser
@@ -77,9 +79,15 @@ def near_dup_rewrite(
         neighbor_window=neighbor_window, **minhash_kw
     ).localCheckpoint(eager=True)
     scanned = clusters.count()  # vertices == candidate docs; no rescan
-    losers = clusters.filter(~F.col("is_rep")).select("__id")
-    changes = _victim_deletes(table, m, losers)
-    stats = table.merge(changes, batch_key=(query_id, batch_id))
+    # loser ids back to key columns: a narrow (key-only) scan of the same
+    # snapshot, materialized for the tombstone builder's two passes
+    losers = (
+        live.select("__id", *key)
+        .join(clusters.filter(~F.col("is_rep")), "__id", "semi")
+        .drop("__id")
+        .localCheckpoint(eager=True)
+    )
+    stats = table.merge(table.tombstones_for(losers, m), batch_key=(query_id, batch_id))
     removed = 0 if stats.skipped else stats.rows_deleted
     return DedupReport(scanned=scanned, removed=removed, merge=stats)
 
@@ -115,8 +123,8 @@ def quality_rewrite(
     ``LakeTable.merge`` as tombstoned 'D' changes, so the pass is
     exactly-once under the ``(query_id, batch_id)`` ledger, resumable,
     lineage-visible, and time-travels. The filter pipeline is evaluated
-    ONCE (checkpointed victims frame); the delete builder re-reads only
-    narrow key + seq columns (parquet-pruned)."""
+    ONCE (checkpointed verdicts frame); the tombstones come from
+    ``LakeTable.tombstones_for`` over the snapshot the verdicts read."""
     from go_bqloader_spark.operators.textpipeline import (
         paragraph_dedup,
         repetition_stats,
@@ -124,9 +132,8 @@ def quality_rewrite(
 
     m = table.manifest()
     key = m["key"]
-    live = table.read()
-    docs = live.filter(F.col(text_col).isNotNull()).select(
-        F.concat_ws("\x00", *key).alias("__id"), F.col(text_col)
+    docs = table.read(version=m["version"]).filter(F.col(text_col).isNotNull()).select(
+        F.concat_ws("\x00", *key).alias("__id"), *key, F.col(text_col)
     )
     rep = repetition_stats(
         docs, id_col="__id", text_col=text_col,
@@ -143,11 +150,11 @@ def quality_rewrite(
         ).alias("chunk_dup"),
     )
     verdicts = (
-        docs.select("__id")
+        docs.select("__id", *key)
         .join(rep, "__id", "left")
         .join(chunks, "__id", "left")
         .select(
-            "__id",
+            *key,
             F.coalesce("low_quality", F.lit(False)).alias("low_quality"),
             F.coalesce("chunk_dup", F.lit(False)).alias("chunk_dup"),
         )
@@ -156,38 +163,11 @@ def quality_rewrite(
     scanned = verdicts.count()
     n_rep = verdicts.filter("low_quality").count()
     n_dup = verdicts.filter("chunk_dup").count()
-    losers = verdicts.filter("low_quality OR chunk_dup").select("__id")
-    changes = _victim_deletes(table, m, losers)
-    stats = table.merge(changes, batch_key=(query_id, batch_id))
+    losers = verdicts.filter("low_quality OR chunk_dup").select(*key)
+    stats = table.merge(table.tombstones_for(losers, m), batch_key=(query_id, batch_id))
     removed = 0 if stats.skipped else stats.rows_deleted
     return QualityReport(
         scanned=scanned, removed=removed, n_repetitive=n_rep,
         n_chunk_dup=n_dup, merge=stats,
     )
 
-
-def _victim_deletes(table: LakeTable, m: dict, losers: DataFrame) -> DataFrame:
-    """Delete changes for the loser ids: a NARROW re-read of the table —
-    key columns + ``_seq`` only, so parquet column pruning keeps the wide
-    payload (html/text) on disk; a tombstone needs no before-image, so
-    non-key columns ride as typed NULLs. Each victim's delete is one seq
-    above its stored row, so the LWW window is guaranteed to pick it."""
-    key = m["key"]
-    key_set = set(key)
-    types = {f["name"]: f["type"] for f in table.schema_fields(m)}
-    data_cols = [
-        f["name"] for f in table.schema_fields(m)
-        if f["name"] not in (SEQ_COL, DELETED_COL)
-    ]
-    narrow = table.read().select(
-        F.concat_ws("\x00", *key).alias("__id"), *key, F.col(SEQ_COL)
-    )
-    return narrow.join(losers, "__id").select(
-        F.lit("D").alias("op"),
-        (F.col(SEQ_COL) + 1).alias("seq"),
-        *[
-            F.col(c) if c in key_set
-            else F.lit(None).cast(types[c]).alias(c)
-            for c in data_cols
-        ],
-    )

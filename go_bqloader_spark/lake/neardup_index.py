@@ -207,12 +207,7 @@ class NearDupIndex:
         # candidate lookup touches only the index buckets the new band
         # hashes fall in — bucket membership is a pure function of the
         # hash, computed here from the batch (bounded by n_buckets ints)
-        probe = sorted(
-            r["__b"]
-            for r in newb.select(
-                self.table._bucket_expr(im).alias("__b")
-            ).distinct().collect()
-        )
+        probe = self.table.bucket_ids(newb, im)
         # every sweep read is PINNED to the snapshot its bucket ids were
         # computed from (version=...): bucket membership is a function of
         # the layout, and these DataFrames evaluate lazily inside the
@@ -262,12 +257,7 @@ class NearDupIndex:
         # the old-side candidate keys are batch-sized.
         old_keys = cand.filter(~F.col("__new")).select(*key, "__oid").distinct()
         if old_keys.limit(1).count():
-            cbuckets = sorted(
-                r["__b"]
-                for r in old_keys.select(
-                    self.corpus._bucket_expr(cm).alias("__b")
-                ).distinct().collect()
-            )
+            cbuckets = self.corpus.bucket_ids(old_keys, cm)
             live = self.corpus.read(version=cm["version"], buckets=cbuckets).select(
                 F.concat_ws("\x00", *key).alias("__oid")
             )
@@ -289,11 +279,12 @@ class NearDupIndex:
             losers = self.spark.createDataFrame([], "__id string")
         losers = losers.localCheckpoint(eager=True)
 
-        # corpus tombstones — same narrow delete construction as
-        # maintenance._victim_deletes, but bucket-pruned: loser keys are
-        # known, so only their corpus buckets are read
-        changes = self._victim_deletes_pruned(cm, losers, allb)
-        corpus_stats = self.corpus.merge(changes, batch_key=(query_id, batch_id))
+        # corpus tombstones from the decision snapshot; the losers' key
+        # columns ride the band frames
+        loser_keys = allb.join(losers, "__id", "semi").select(*key)
+        corpus_stats = self.corpus.merge(
+            self.corpus.tombstones_for(loser_keys, cm), batch_key=(query_id, batch_id)
+        )
         removed = 0 if corpus_stats.skipped else corpus_stats.rows_deleted
 
         # index update in the same pass: upsert the new WINNERS' bands
@@ -307,19 +298,11 @@ class NearDupIndex:
                 "band_hash", "band_idx", *key, "sig",
             )
         )
-        idx_m = self.table.manifest()
-        old_loser_bands = (
-            self.table.read(version=idx_m["version"], buckets=probe)
-            .withColumn("__id", F.concat_ws("\x00", *key))
-            .join(losers, "__id", "semi")
-            .select(
-                F.lit("D").alias("op"), (F.col(SEQ_COL) + 1).alias("seq"),
-                "band_hash", "band_idx", *key,
-                F.lit(None).cast("string").alias("sig"),
-            )
+        old_loser_bands = self.table.tombstones_for(
+            oldb.join(losers, "__id", "semi"), im
         )
         idx_stats = self.table.merge(
-            ups.unionByName(old_loser_bands),
+            ups.unionByName(old_loser_bands, allowMissingColumns=True),
             batch_key=(f"{query_id}_index", batch_id),
         )
         return IncrementalDedupReport(
@@ -327,7 +310,7 @@ class NearDupIndex:
             candidate_pairs=n_pairs,
             removed=removed,
             index_buckets_probed=len(probe),
-            index_buckets_total=idx_m["n_buckets"],
+            index_buckets_total=im["n_buckets"],
             corpus_merge=corpus_stats,
             index_merge=idx_stats,
         )
@@ -350,62 +333,19 @@ class NearDupIndex:
         )
         fresh = self._doc_bands(live).localCheckpoint(eager=True)
         ikey = ["band_hash", "band_idx", *key]
-        stored = self.table.read().alias("s")
+        im = self.table.manifest()
+        stored = self.table.read(version=im["version"]).select(*ikey).alias("s")
         want = fresh.select(*ikey).alias("w")
         # null-safe equality: key columns (e.g. a NULL warc_ts) must match
         # as values, or every stored row with a NULL key looks stale
-        cond = None
-        for c in ikey:
-            eq = F.col(f"s.{c}").eqNullSafe(F.col(f"w.{c}"))
-            cond = eq if cond is None else (cond & eq)
-        stale = (
-            stored.join(want, cond, "anti")
-            .select(
-                F.lit("D").alias("op"), (F.col(SEQ_COL) + 1).alias("seq"),
-                *ikey, F.lit(None).cast("string").alias("sig"),
-            )
-        )
+        cond = [F.col(f"s.{c}").eqNullSafe(F.col(f"w.{c}")) for c in ikey]
+        stale = stored.join(want, cond, "anti").localCheckpoint(eager=True)
         ups = fresh.select(
             F.lit("U").alias("op"), F.col(SEQ_COL).alias("seq"),
             *ikey, "sig",
         )
         return self.table.merge(
-            ups.unionByName(stale), batch_key=(query_id, batch_id)
+            ups.unionByName(self.table.tombstones_for(stale, im), allowMissingColumns=True),
+            batch_key=(query_id, batch_id),
         )
 
-    def _victim_deletes_pruned(
-        self, cm: dict, losers: DataFrame, allb: DataFrame
-    ) -> DataFrame:
-        """Delete changes for loser docs, reading only the corpus buckets
-        the losers live in (their key columns ride the band frames)."""
-        key = cm["key"]
-        key_set = set(key)
-        types = {f["name"]: f["type"] for f in self.corpus.schema_fields(cm)}
-        data_cols = [
-            f["name"] for f in self.corpus.schema_fields(cm)
-            if f["name"] not in (SEQ_COL, DELETED_COL)
-        ]
-        loser_keys = (
-            allb.select(*key, "__id").join(losers, "__id", "semi").distinct()
-        )
-        buckets = sorted(
-            r["__b"]
-            for r in loser_keys.select(
-                self.corpus._bucket_expr(cm).alias("__b")
-            ).distinct().collect()
-        )
-        if not buckets:
-            return self.spark.createDataFrame([], "op string, seq bigint")
-        # pinned to the decision snapshot — see the update() comment
-        narrow = self.corpus.read(version=cm["version"], buckets=buckets).select(
-            F.concat_ws("\x00", *key).alias("__id"), *key, F.col(SEQ_COL)
-        )
-        return narrow.join(losers, "__id").select(
-            F.lit("D").alias("op"),
-            (F.col(SEQ_COL) + 1).alias("seq"),
-            *[
-                F.col(c) if c in key_set
-                else F.lit(None).cast(types[c]).alias(c)
-                for c in data_cols
-            ],
-        )

@@ -61,6 +61,7 @@ from __future__ import annotations
 import base64
 import json
 import os
+import threading
 import time
 import uuid
 from contextlib import contextmanager
@@ -96,6 +97,12 @@ def _spark_type(ddl: str) -> T.DataType:
     return _DDL_TO_SPARK[ddl]
 
 
+_AQE_CONF = "spark.sql.adaptive.enabled"
+_aqe_lock = threading.Lock()
+_aqe_depth = 0
+_aqe_saved = "true"
+
+
 @contextmanager
 def _no_aqe(spark: SparkSession):
     """Run an action without adaptive query execution, restoring the
@@ -105,15 +112,26 @@ def _no_aqe(spark: SparkSession):
     pure latency here: measured ~65 ms per micro-batch, 10% of the
     bench merge loop (min-of-3 4.85 s vs 5.38 s). Queries keep AQE on
     (skew-join handling, partition coalescing); only the merge-path
-    actions opt out. The toggle is a session conf, so a concurrent
-    writer thread may briefly plan its own query without AQE — a
-    performance-only effect, never a correctness one."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    actions opt out.
+
+    The toggle is a session conf shared by every writer thread, so
+    overlapping users are counted under a lock: the outermost entry
+    saves the caller's value and only the last exit restores it. A
+    query another thread plans meanwhile runs without AQE — a
+    performance-only effect that ends with the last merge action."""
+    global _aqe_depth, _aqe_saved
+    with _aqe_lock:
+        if _aqe_depth == 0:
+            _aqe_saved = spark.conf.get(_AQE_CONF, "true")
+            spark.conf.set(_AQE_CONF, "false")
+        _aqe_depth += 1
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+        with _aqe_lock:
+            _aqe_depth -= 1
+            if _aqe_depth == 0:
+                spark.conf.set(_AQE_CONF, _aqe_saved)
 
 
 class CommitConflict(RuntimeError):
@@ -978,6 +996,38 @@ class LakeTable:
         if types.get(m["bucket_col"]) in ("int", "bigint"):
             col = col.cast("bigint")
         return F.pmod(F.xxhash64(col), F.lit(m["n_buckets"])).cast("int")
+
+    def bucket_ids(self, keys: DataFrame, m: dict[str, Any]) -> list[int]:
+        """Sorted distinct bucket ids of ``keys`` (a frame holding the
+        bucket column) under snapshot ``m``'s layout — one small collect.
+        Read with these ids only from ``m`` itself: another layout (after
+        a rebucket) puts the same keys in other buckets."""
+        return sorted(
+            r["__b"]
+            for r in keys.select(self._bucket_expr(m).alias("__b")).distinct().collect()
+        )
+
+    def tombstones_for(self, keys: DataFrame, m: dict[str, Any]) -> DataFrame:
+        """Delete changes for the live rows of snapshot ``m`` whose key is
+        in ``keys`` (a frame of the key columns): ``op='D'``, ``seq`` one
+        above the stored row's ``_seq``, and the key columns — ``merge()``
+        NULL-fills the payload. Every maintenance delete is built here.
+
+        ``m`` is the snapshot the caller decided on. Reading it, and not
+        the latest one, lets a change committed after the decision (with
+        a higher seq) outrank the tombstone, and keeps the bucket pruning
+        right when a rebucket commits in between. The read is narrow
+        (key + ``_seq``; parquet prunes the payload columns) and opens
+        only the victims' buckets; key equality is NULL-safe. ``keys`` is
+        evaluated twice (bucket ids, then the join): materialize it when
+        it is costly to compute."""
+        key = m["key"]
+        victims = keys.select(*[F.col(k).alias(f"__k{i}") for i, k in enumerate(key)])
+        match = [F.col(k).eqNullSafe(F.col(f"__k{i}")) for i, k in enumerate(key)]
+        stored = self._read(m, self.bucket_ids(keys, m), False).select(*key, SEQ_COL)
+        return stored.join(victims, match, "semi").select(
+            F.lit("D").alias("op"), (F.col(SEQ_COL) + 1).alias("seq"), *key
+        )
 
     @staticmethod
     def _committed_in(m: dict[str, Any], query_id: str, batch_id: int) -> bool:

@@ -317,6 +317,25 @@ def _min_root_labels(rows) -> list[tuple]:
     return [(n, find(n)) for n in list(parent)]
 
 
+def _driver_finish(
+    pairs: DataFrame, nodes: DataFrame, lbl: str, id_col: str
+) -> DataFrame:
+    """Resolve a small edge list on the driver: collect ``pairs`` (a, b),
+    run :func:`_min_root_labels`, and label each row of ``nodes`` (cols
+    ``a`` and ``lbl``) with one broadcast join — the root of its ``lbl``,
+    or ``lbl`` itself when that appears in no edge. Python driver memory
+    is about 0.5 KB per collected pair of 40-character ids (the Row, both
+    ids, their union-find entries and labels; tracemalloc peak), so about
+    0.5 GB at the default 1M-pair gate."""
+    a_type = pairs.schema["a"].dataType.simpleString()
+    roots = pairs.sparkSession.createDataFrame(
+        _min_root_labels(pairs.collect()), f"__n {a_type}, __l2 {a_type}"
+    )
+    return nodes.join(F.broadcast(roots), F.col(lbl) == F.col("__n"), "left").select(
+        F.col("a").alias(id_col), F.coalesce("__l2", lbl).alias("cluster_id")
+    )
+
+
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
@@ -343,15 +362,14 @@ def connected_components(
        sf0.1 this is 9.4M edges → a few thousand.
     3. Resolve the quotient graph: below ``driver_finish_max_edges``
        (r6) an exact min-root union-find runs on the driver over the
-       collected quotient edges — bounded metadata (narrow label pairs,
-       ~16 MB at the default gate), replacing ~4 Spark jobs per
-       iteration round with one collect. Above the gate, iterate
-       jump+hop rounds on the contracted graph only: each round a label
-       first adopts the current label OF its label (pointer jumping /
-       path compression — O(log diameter) rounds), then the min over
-       its quotient-graph neighbors. Per-round cost is label-sized, not
-       edge-sized — the full edge set is scanned O(1) times total
-       instead of O(rounds).
+       collected quotient edges (:func:`_driver_finish`), replacing ~4
+       Spark jobs per iteration round with one collect. Above the gate,
+       iterate jump+hop rounds on the contracted graph only: each round
+       a label first adopts the current label OF its label (pointer
+       jumping / path compression — O(log diameter) rounds), then the
+       min over its quotient-graph neighbors. Per-round cost is
+       label-sized, not edge-sized — the full edge set is scanned O(1)
+       times total instead of O(rounds).
     4. Compose: final(a) = contracted_label(hop1_label(a)).
 
     The driver loop checks a scalar convergence count per round (one
@@ -361,45 +379,32 @@ def connected_components(
     ``RuntimeError`` if ``max_iter`` rounds exhaust before the fixpoint —
     returning partial labels would silently split clusters (ADVICE r3).
     """
-    # materialize the (static) edge list once — every round joins it, and
-    # without this the upstream pair-generation pipeline (LSH, signature
-    # join, ...) would re-execute per round
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+    # materialize the (static) edge list once as distinct undirected
+    # pairs — every round joins it, and without this the upstream
+    # pair-generation pipeline (LSH, signature join, ...) would re-execute
+    # per round
+    pairs = (
+        edges.select(
+            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
+        )
+        .distinct()
         .localCheckpoint(eager=True)
     )
+    und = pairs.unionByName(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
     if vertices is not None:
         nodes = vertices.select(F.col(id_col).alias("a")).distinct()
     else:
         nodes = und.select("a").distinct()
     identity = nodes.select("a", F.col("a").alias("lbl"))
 
-    # (0 — r6b) early driver finish: ``und`` is already materialized, so
+    # (0 — r6b) early driver finish: ``pairs`` is already materialized, so
     # counting it is one tiny job. Below the gate the hop/contract
     # machinery (2 join jobs + 2 checkpoints, each label-sized but each
-    # paying full Spark job latency) is skipped outright: collect the
-    # bounded edge list, run the same exact min-root union-find, and
-    # label every vertex with one broadcast join. Same bounded-metadata
-    # rule and the same gate as the quotient-graph finish below (x2:
-    # ``und`` carries both directions of each edge); the distributed
-    # path above the gate — the 10^10-doc shape — is unchanged.
-    if und.count() <= 2 * driver_finish_max_edges:
-        mapping = _min_root_labels(und.collect())
-        spark = edges.sparkSession
-        a_type = und.schema["a"].dataType.simpleString()
-        if mapping:
-            lbl_df = spark.createDataFrame(mapping, f"a {a_type}, lbl {a_type}")
-        else:
-            lbl_df = und.select("a", F.col("a").alias("lbl")).limit(0)
-        cl = lbl_df.select(F.col("a").alias("__n"), F.col("lbl").alias("__l2"))
-        return (
-            nodes.join(F.broadcast(cl), nodes["a"] == cl["__n"], "left")
-            .select(
-                F.col("a").alias(id_col),
-                F.coalesce("__l2", "a").alias("cluster_id"),
-            )
-        )
+    # paying full Spark job latency) is skipped outright. Same gate as the
+    # quotient-graph finish below; the distributed path above the gate —
+    # the 10^10-doc shape — is unchanged.
+    if pairs.count() <= driver_finish_max_edges:
+        return _driver_finish(pairs, nodes, "a", id_col)
 
     # (1) one hop over the full edge set (initial labels are the ids, so
     # nbr_min is just min(neighbor id) — no label join needed yet)
@@ -432,31 +437,11 @@ def connected_components(
     # vanish in step 1/2). The jump+hop loop below costs ~4 tiny Spark
     # jobs PER ROUND plus localCheckpoints — pure driver-side job
     # overhead when the data is kilobytes. Below the size gate the
-    # quotient edges are collected (bounded: <= driver_finish_max_edges
-    # narrow pairs, ~16 MB at the default) and resolved with an exact
-    # union-find keeping the min member as root — identical labels to
-    # the loop's fixpoint, measured ~4 s faster at sf1.0. Above the
-    # gate the label-sized iterate loop runs unchanged (the 10^10-doc
-    # shape).
-    n_cedges = cund.count()
-    if n_cedges <= driver_finish_max_edges:
-        mapping = _min_root_labels(cund.collect())
-        spark = edges.sparkSession
-        a_type = cund.schema["a"].dataType.simpleString()
-        if mapping:
-            labels = spark.createDataFrame(
-                mapping, f"a {a_type}, lbl {a_type}"
-            )
-        else:
-            labels = cund.select("a", F.col("a").alias("lbl")).limit(0)
-        cl = labels.select(F.col("a").alias("__n"), F.col("lbl").alias("__l2"))
-        return (
-            l1.join(F.broadcast(cl), l1["lbl"] == cl["__n"], "left")
-            .select(
-                F.col("a").alias(id_col),
-                F.coalesce("__l2", "lbl").alias("cluster_id"),
-            )
-        )
+    # union-find gives labels identical to the loop's fixpoint, measured
+    # ~4 s faster at sf1.0. Above the gate the label-sized iterate loop
+    # runs unchanged (the 10^10-doc shape).
+    if cund.count() <= driver_finish_max_edges:
+        return _driver_finish(cund, l1, "lbl", id_col)
 
     # (3) jump+hop rounds on the contracted graph
     labels = (

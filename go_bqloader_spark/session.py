@@ -13,6 +13,36 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_memory_bytes() -> int:
+    """Physical memory, lowered to the cgroup limit when one is set."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            total = min(total, int(raw))
+    return total
+
+
+def default_memory(mem_bytes: int) -> tuple[str, str]:
+    """``(spark.driver.memory, spark.memory.offHeap.size)`` for a host with
+    ``mem_bytes`` of memory: 3/8 of it for the heap and 1/4 off-heap,
+    capped at 24g and 16g (reached at 64 GiB) and floored at 1g and
+    512m (Spark refuses a heap under ~450 MB)."""
+    mb = mem_bytes // 2**20
+
+    def conf(v: int) -> str:
+        return f"{v // 1024}g" if v % 1024 == 0 else f"{v}m"
+
+    return (
+        conf(max(1024, min(24 * 1024, mb * 3 // 8))),
+        conf(max(512, min(16 * 1024, mb // 4))),
+    )
+
+
 def build_session(
     app_name: str = "go_bqloader_spark",
     master: str | None = None,
@@ -24,9 +54,13 @@ def build_session(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
     ``shuffle_partitions`` defaults to the local core count so that one
     shuffle partition maps to one core — at cluster scale callers pass
-    2-3x total executor cores instead.
+    2-3x total executor cores instead. Driver heap and off-heap sizes
+    come from :func:`default_memory` over :func:`host_memory_bytes`
+    (24g + 16g on hosts with 64 GiB or more); ``extra_conf`` overrides
+    them like any other setting.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    driver_mem, offheap = default_memory(host_memory_bytes())
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -55,14 +89,14 @@ def build_session(
         # _footer_stats_zones); INT96 carries no usable statistics
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
         # Tungsten sort/agg buffers off-heap: keeps the row-shuffle hot path
         # out of the GC entirely (measured: 400s+ GC per 16M-row window at
         # 32 threads on-heap, ~20s off-heap)
         .config("spark.memory.offHeap.enabled", "true")
-        .config("spark.memory.offHeap.size", os.environ.get("SPARK_GRAFT_OFFHEAP", "16g"))
+        .config("spark.memory.offHeap.size", offheap)
         # never mmap shuffle blocks: 32 threads × mmap/unmap contend on the
         # process-wide mmap_sem and stall the whole executor
         .config("spark.storage.memoryMapThreshold", "2g")

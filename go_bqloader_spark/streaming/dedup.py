@@ -250,20 +250,16 @@ class IngestContentDedup:
         # with in-watermark arrivals. Bounded work: the state table is
         # narrow and horizon-sized; prune rides the normal merge path so
         # it time-travels/replays like everything else.
-        live = self.state.read()
+        m = self.state.manifest()
+        live = self.state.read(version=m["version"])
         cutoff = live.agg(F.max("first_ts").alias("m")).collect()[0]["m"]
         if cutoff is None:
             return
-        expired = (
-            live.filter(
-                F.col("first_ts")
-                < F.lit(cutoff) - F.expr(f"INTERVAL {self.horizon_sec} SECONDS")
-            )
-            .select(
-                F.lit("D").alias("op"),
-                (F.col("_seq") + 1).alias("seq"),
-                "__fp",
-                F.col("first_ts"),
-            )
+        expired = live.filter(
+            F.col("first_ts")
+            < F.lit(cutoff) - F.expr(f"INTERVAL {self.horizon_sec} SECONDS")
         )
-        self.state.merge(expired, batch_key=(self.query_id + "#prune", batch_id))
+        self.state.merge(
+            self.state.tombstones_for(expired, m),
+            batch_key=(self.query_id + "#prune", batch_id),
+        )

@@ -324,8 +324,8 @@ def test_connected_components_driver_finish_equals_loop(spark):
         ).collect()
     }
     assert via_driver == via_loop
-    # r6b three-way: a gate that skips the EARLY full-edge finish (und
-    # holds 2x|edges| rows > 2*gate) but still admits the contracted
+    # r6b three-way: a gate that skips the EARLY full-edge finish (more
+    # distinct pairs than the gate) but still admits the contracted
     # quotient graph exercises the middle hop/contract+union-find tier
     via_quotient = {
         r["doc_id"]: r["cluster_id"]
@@ -334,6 +334,33 @@ def test_connected_components_driver_finish_equals_loop(spark):
         ).collect()
     }
     assert via_driver == via_quotient
+
+
+def test_connected_components_gate_counts_distinct_pairs(spark, monkeypatch):
+    """The early driver finish gates on DISTINCT undirected pairs: edges
+    given in both directions and repeated, with exactly gate-many distinct
+    pairs, still take it — the union-find sees the original pairs once
+    each, not the quotient graph of the distributed path."""
+    from go_bqloader_spark.operators import dedup as dd
+
+    seen = []
+    real = dd._min_root_labels
+
+    def spy(rows):
+        seen.append(sorted((r["a"], r["b"]) for r in rows))
+        return real(rows)
+
+    monkeypatch.setattr(dd, "_min_root_labels", spy)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, 3), (3, 2), (1, 2), (5, 4), (4, 5)],
+        "d1 bigint, d2 bigint",
+    )
+    got = {
+        r["id"]: r["cluster_id"]
+        for r in dd.connected_components(edges, driver_finish_max_edges=3).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}
+    assert seen == [[(1, 2), (2, 3), (4, 5)]]
 
 
 def test_near_dup_clusters_end_to_end(spark):

@@ -600,15 +600,13 @@ def test_near_dup_rewrite_maintenance(spark, tmp_path, mode):
     rep3 = near_dup_rewrite(t, threshold=0.5, batch_id=1)
     assert rep3.removed == 0
 
-    # r4 judge item 5: the victim-delete builder is payload-free — every
+    # the tombstone builder is payload-free — every
     # parquet scan it plans reads only key + engine columns (html/text
     # pruned), so tombstoning never moves page bytes
     import re
 
-    from go_bqloader_spark.lake import maintenance as mnt
-
-    losers = spark.createDataFrame([("probe\x00None",)], "__id string")
-    plan = (mnt._victim_deletes(t, t.manifest(), losers)
+    losers = spark.createDataFrame([("https://c.ex/1", None)], "url string, warc_ts timestamp")
+    plan = (t.tombstones_for(losers, t.manifest())
             ._jdf.queryExecution().executedPlan().toString())
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
     assert schemas
@@ -661,6 +659,98 @@ def test_quality_rewrite_maintenance(spark, tmp_path, mode):
     # a fresh pass over the cleaned table finds nothing to remove
     rep3 = quality_rewrite(t, batch_id=1)
     assert rep3.removed == 0
+
+
+def _race_update_after(monkeypatch, module, name, table, url, text):
+    """Wrap ``module.name`` so that, once the maintenance pass has built
+    its decision on it, an update of ``url`` (seq 100) commits before the
+    pass builds its tombstones."""
+    real = getattr(module, name)
+
+    def wrapped(*a, **kw):
+        out = real(*a, **kw)
+        table.merge(
+            table.spark.createDataFrame(
+                [("U", 100, url, None, None, text, "en")],
+                "op string, seq bigint, url string, warc_ts timestamp, "
+                "html binary, text string, lang string",
+            ),
+            batch_key=("late", 0),
+        )
+        return out
+
+    monkeypatch.setattr(module, name, wrapped)
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_near_dup_rewrite_keeps_update_after_decision(spark, tmp_path, monkeypatch, mode):
+    """A loser updated after near_dup_rewrite clustered keeps its update:
+    the tombstone carries the decision snapshot's seq + 1 and loses LWW
+    to the later seq."""
+    from go_bqloader_spark.lake import maintenance as mnt
+    from go_bqloader_spark.lake import near_dup_rewrite
+
+    t = _make_table(spark, tmp_path, n_buckets=4, write_mode=mode)
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    t.merge(spark.createDataFrame(
+        [("U", 1, "https://a.ex/1", None, None, base, "en"),
+         ("U", 2, "https://a.ex/2", None, None, base, "en")],
+        "op string, seq bigint, url string, warc_ts timestamp, "
+        "html binary, text string, lang string",
+    ), batch_key=("q", 0))
+    fresh = "an entirely rewritten page about columnar storage engines"
+    _race_update_after(monkeypatch, mnt, "near_dup_clusters", t, "https://a.ex/2", fresh)
+
+    rep = near_dup_rewrite(t, threshold=0.5, batch_id=0)
+    assert rep.scanned == 2
+    live = {r["url"]: r["text"] for r in t.read().collect()}
+    assert live == {"https://a.ex/1": base, "https://a.ex/2": fresh}
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_quality_rewrite_keeps_update_after_decision(spark, tmp_path, monkeypatch, mode):
+    """Same race for quality_rewrite: a flagged page rewritten after the
+    verdicts were computed survives with its new text."""
+    from go_bqloader_spark.lake import quality_rewrite
+    from go_bqloader_spark.operators import textpipeline
+
+    t = _make_table(spark, tmp_path, n_buckets=4, write_mode=mode)
+    clean = " ".join(f"w{i}" for i in range(30))
+    t.merge(spark.createDataFrame(
+        [("U", 1, "https://c.ex/1", None, None, clean, "en"),
+         ("U", 2, "https://s.ex/1", None, None,
+          "spam spam spam spam spam spam spam spam", "en")],
+        "op string, seq bigint, url string, warc_ts timestamp, "
+        "html binary, text string, lang string",
+    ), batch_key=("q", 0))
+    fresh = " ".join(f"v{i}" for i in range(30))
+    _race_update_after(monkeypatch, textpipeline, "repetition_stats", t, "https://s.ex/1", fresh)
+
+    rep = quality_rewrite(t, batch_id=0)
+    assert rep.n_repetitive == 1
+    live = {r["url"]: r["text"] for r in t.read().collect()}
+    assert live == {"https://c.ex/1": clean, "https://s.ex/1": fresh}
+
+
+def test_no_aqe_overlapping_users_restore_caller_setting(spark):
+    """Two merge actions whose AQE opt-outs overlap (enter A, enter B,
+    exit A, exit B) leave AQE as the caller had it; the first exit must
+    not re-enable it under B, and B's exit must not restore A's 'false'."""
+    from go_bqloader_spark.lake.table import _no_aqe
+
+    conf = "spark.sql.adaptive.enabled"
+    assert spark.conf.get(conf) == "true"
+    a, b = _no_aqe(spark), _no_aqe(spark)
+    try:
+        a.__enter__()
+        b.__enter__()
+        assert spark.conf.get(conf) == "false"
+        a.__exit__(None, None, None)
+        assert spark.conf.get(conf) == "false"  # B is still running
+        b.__exit__(None, None, None)
+        assert spark.conf.get(conf) == "true"
+    finally:
+        spark.conf.set(conf, "true")
 
 
 @pytest.mark.parametrize("mode", MODES)

@@ -261,16 +261,16 @@ def test_sweep_races_concurrent_rebucket(spark, tmp_path, monkeypatch):
     inc.merge(_batch(spark, rows), batch_key=("feed", 0))
     other = LakeTable(spark, str(tmp_path / "inc"))
 
-    orig_vdp = NearDupIndex._victim_deletes_pruned
+    orig_tombstones = inc.tombstones_for
     state = {"armed": True}
 
-    def vdp_with_race(self, cm, losers, allb):
+    def tombstones_with_race(keys, m):
         if state["armed"]:
             state["armed"] = False
             other.rebucket(16)  # commits between decision and reads
-        return orig_vdp(self, cm, losers, allb)
+        return orig_tombstones(keys, m)
 
-    monkeypatch.setattr(NearDupIndex, "_victim_deletes_pruned", vdp_with_race)
+    monkeypatch.setattr(inc, "tombstones_for", tombstones_with_race)
     r = idx.update(batch_id=0)
 
     assert r.removed == 8  # every f{i}b loses to f{i}a
@@ -278,3 +278,36 @@ def test_sweep_races_concurrent_rebucket(spark, tmp_path, monkeypatch):
     assert _live_urls(inc) == _live_urls(ref) == sorted(urls)
     r2 = idx.update(batch_id=1)
     assert r2.new_docs == 0 and r2.removed == 0
+
+
+def test_loser_band_tombstones_survive_index_rebucket(spark, tmp_path, monkeypatch):
+    """The old losers' band rows are read from the index snapshot the
+    probe bucket ids were computed from. A rebucket of the INDEX that
+    commits after that snapshot (here: right after the corpus tombstone
+    merge, before the index merge) must not prune the new layout with the
+    old ids — every loser band row is still tombstoned."""
+    t = _corpus(spark, tmp_path)
+    idx = NearDupIndex.create(spark, str(tmp_path / "idx"), t, n_buckets=8)
+    fams = [" ".join(f"fam{i}tok{j}" for j in range(16)) for i in range(4)]
+    t.merge(_batch(spark, [(i + 1, f"u/f{i}z", f) for i, f in enumerate(fams)]),
+            batch_key=("feed", 0))
+    idx.update(batch_id=0)
+    # smaller keys arrive later: every old doc u/f{i}z loses
+    t.merge(_batch(spark, [(10 + i, f"u/f{i}a", f) for i, f in enumerate(fams)]),
+            batch_key=("feed", 1))
+
+    other = LakeTable(spark, str(tmp_path / "idx"))
+    orig_merge = t.merge
+
+    def merge_then_rebucket(changes, batch_key=None, **kw):
+        stats = orig_merge(changes, batch_key=batch_key, **kw)
+        other.rebucket(13)
+        return stats
+
+    monkeypatch.setattr(t, "merge", merge_then_rebucket)
+    r = idx.update(batch_id=1)
+
+    assert r.removed == 4
+    assert idx.table.manifest()["n_buckets"] == 13
+    idx_urls = {r2["url"] for r2 in idx.table.read().select("url").collect()}
+    assert idx_urls == {f"u/f{i}a" for i in range(4)}

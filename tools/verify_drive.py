@@ -296,6 +296,26 @@ print(f"NEARDUP-INDEX OK: incremental pass removed={nr2.removed} "
       f"probed={nr2.index_buckets_probed}/{nr2.index_buckets_total} buckets, "
       f"indexed_through={ndx.indexed_through()}")
 
+# --- copy-on-write table: merge, then near_dup_rewrite tombstones ---
+from go_bqloader_spark.lake import near_dup_rewrite
+tmp7 = tempfile.mkdtemp(prefix="gbs_cow_")
+tw = LakeTable.create(
+    spark, tmp7,
+    [("url", "string"), ("warc_ts", "timestamp"), ("html", "binary"),
+     ("text", "string"), ("lang", "string")],
+    key=["url", "warc_ts"], n_buckets=4, write_mode="cow",
+)
+tw.merge(_nb([(1, "u/c2", fam), (2, "u/c1", fam),
+              (3, "u/solo", "unrelated volcanic geology text")]),
+         batch_key=("feed", 0))
+cw = near_dup_rewrite(tw, batch_id=0)
+live = sorted(r["url"] for r in tw.read().select("url").collect())
+assert cw.removed == 1 and live == ["u/c1", "u/solo"], (cw, live)
+assert near_dup_rewrite(tw, batch_id=0).merge.skipped
+assert all(len(es) == 1 for es in tw.manifest()["buckets"].values())
+print(f"COW-MAINT OK: near_dup_rewrite removed={cw.removed} on a cow table, "
+      "one file per bucket, ledger skip")
+
 # --- format-3 manifests: O(delta) groups + bounded coalescing (r5 tail) ---
 import json as _json
 tmp6 = tempfile.mkdtemp(prefix="gbs_f3_")
